@@ -679,18 +679,19 @@ def _copy_trees(
     from concurrent.futures import ThreadPoolExecutor
 
     sp, sfs = hadoop_path(spark, src_root)
-    if sfs.getScheme() == "file":
+    dp, dfs = hadoop_path(spark, dst_root)
+    if sfs.getScheme() == "file" and dfs.getScheme() == "file":
         # local-filesystem fast path (r18): each Hadoop copy_tree is ~4
         # py4j round-trips + FileUtil setup — ~78 ms/partition even
         # pooled, 9.7 s of the re-priced 2,000-site purge.  On file://
         # the same byte copy (data + .crc sidecars verbatim) is plain
-        # shutil, no gateway traffic.  Non-local schemes (HDFS, s3a)
-        # keep the Hadoop path below.
+        # shutil, no gateway traffic.  If either side is another scheme
+        # (HDFS, s3a), the Hadoop path below does the copy.
         import os as _os
         import shutil as _shutil
 
         src_base = sp.toUri().getPath()
-        dst_base = hadoop_path(spark, dst_root)[0].toUri().getPath()
+        dst_base = dp.toUri().getPath()
         _os.makedirs(dst_base, exist_ok=True)
         with ThreadPoolExecutor(max_workers=min(32, len(names))) as pool:
             list(

@@ -83,11 +83,6 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: shuffle parallelism for local[N] runs — matched to the 32-thread test
-#: host; AQE coalesces below it when partitions come out small
-_LOCAL_SHUFFLE_PARTITIONS = 32
-
-
 def shuffle_partition_plan(
     master: str, default_parallelism: int, env: os._Environ | dict = os.environ
 ) -> tuple[int, int | None]:
@@ -95,12 +90,20 @@ def shuffle_partition_plan(
     for this deployment.  Returns ``None`` for the second element when no
     AQE override is needed.
 
-    A fixed small number is right ONLY single-host: on a cluster,
-    ``spark.sql.shuffle.partitions`` also seeds AQE's
-    ``initialPartitionNum``, so hardcoding 32 would cap every shuffle at
-    32 tasks no matter how many executors exist.  Cluster masters get
-    2× total cores (floor 200) with a 4× initialPartitionNum headroom so
-    AQE coalesces DOWN from a high-parallelism split instead of being
+    Local masters get one partition per core (``defaultParallelism``,
+    at least 1).  The same number is the state-store count of every
+    stateful streaming operator: Spark reads it from
+    ``spark.sql.shuffle.partitions`` when a checkpoint is first created
+    (a checkpoint keeps the count recorded in it), and each store pays
+    a fixed commit per micro-batch, so a count above the core count
+    only queues commits behind the cores.  AQE coalesces batch
+    shuffles below it when partitions come out small.
+
+    On a cluster ``spark.sql.shuffle.partitions`` also seeds AQE's
+    ``initialPartitionNum``, so a small count would cap every shuffle
+    no matter how many executors exist.  Cluster masters get 2× total
+    cores (floor 200) with a 4× initialPartitionNum headroom so AQE
+    coalesces DOWN from a high-parallelism split instead of being
     capped from below.  ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides
     both modes for explicit tuning."""
     override = env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
@@ -108,7 +111,7 @@ def shuffle_partition_plan(
         n = int(override)
         return n, 4 * n
     if master.startswith("local"):
-        return _LOCAL_SHUFFLE_PARTITIONS, None
+        return max(1, default_parallelism), None
     n = max(2 * default_parallelism, 200)
     return n, 4 * n
 

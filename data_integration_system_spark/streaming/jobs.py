@@ -199,10 +199,10 @@ def running_user_totals(events: DataFrame):
     crawler visited-sets and stale-job bookkeeping, done properly).
 
     State = (n_events, total_value) per user_id; each batch folds its
-    rows into the state and emits the updated snapshot.  At scale state
-    lives in the state store (RocksDB in prod conf), partitioned by the
-    group key; eviction belongs to a timeout conf (NoTimeout here — the
-    test drives a bounded input)."""
+    rows into the state and emits the updated snapshot.  State lives in
+    Spark's default HDFS-backed state store, partitioned by the group
+    key; eviction belongs to a timeout conf (NoTimeout here — the test
+    drives a bounded input)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdfs, state: GroupState):

@@ -454,3 +454,48 @@ def test_purge_snapshot_inference_lossy_partition_values(spark, tmp_path):
     assert rep["copied_partitions"] == 1
     after = {r.id for r in sn.read_current(spark, root).collect()}
     assert after == set(range(20)) - {0, 2}
+
+
+def test_copy_trees_takes_shutil_path_only_when_both_sides_are_local(
+    spark, tmp_path, monkeypatch
+):
+    """The carry-forward copy may use shutil only when BOTH roots are
+    file://.  A local source with a destination on another filesystem
+    must go through the Hadoop copy, never write to a local path derived
+    from the remote URI."""
+    from data_integration_system_spark.pipeline import layout
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    for n in ("site=a", "site=b"):
+        (src / n).mkdir(parents=True)
+        (src / n / "part-0.parquet").write_bytes(n.encode())
+
+    hadoop_copies = []
+    real_copy_tree = layout.copy_tree
+
+    def recording_copy_tree(spark_, s, d):
+        hadoop_copies.append(os.path.basename(d))
+        return real_copy_tree(spark_, s, d)
+
+    monkeypatch.setattr(layout, "copy_tree", recording_copy_tree)
+
+    # both local: shutil fast path, no Hadoop copy
+    layout._copy_trees(spark, str(src), str(dst / "v1"), ["site=a", "site=b"])
+    assert hadoop_copies == []
+    assert (dst / "v1" / "site=b" / "part-0.parquet").read_bytes() == b"site=b"
+
+    class _RemoteFs:
+        def getScheme(self):
+            return "hdfs"
+
+    real_hadoop_path = layout.hadoop_path
+    remote_root = str(dst / "v2")
+
+    def remote_dst(spark_, path):
+        p, fs = real_hadoop_path(spark_, path)
+        return (p, _RemoteFs()) if path == remote_root else (p, fs)
+
+    monkeypatch.setattr(layout, "hadoop_path", remote_dst)
+    layout._copy_trees(spark, str(src), remote_root, ["site=a", "site=b"])
+    assert sorted(hadoop_copies) == ["site=a", "site=b"]
+    assert (dst / "v2" / "site=a" / "part-0.parquet").read_bytes() == b"site=a"

@@ -581,14 +581,16 @@ def test_pagerank_local_fast_path_matches_distributed(spark, monkeypatch):
 
 def test_shuffle_partition_plan_by_deployment(spark):
     """session.get_spark must not cap cluster shuffles at the local
-    default: local masters keep the fixed 32, non-local masters derive
-    from total cores (floor 200) with AQE initialPartitionNum headroom,
-    and the env override wins everywhere."""
+    default: local masters get one partition per core, non-local masters
+    derive from total cores (floor 200) with AQE initialPartitionNum
+    headroom, and the env override wins everywhere."""
     from data_integration_system_spark.session import shuffle_partition_plan
 
-    # local: fixed, no AQE override
+    # local: the core count, no AQE override
     assert shuffle_partition_plan("local[32]", 32, {}) == (32, None)
-    assert shuffle_partition_plan("local[*]", 8, {}) == (32, None)
+    assert shuffle_partition_plan("local[*]", 8, {}) == (8, None)
+    assert shuffle_partition_plan("local[4]", 4, {}) == (4, None)
+    assert shuffle_partition_plan("local[1]", 1, {}) == (1, None)
     # cluster: 2x cores, floored at 200, 4x headroom for AQE to coalesce
     assert shuffle_partition_plan("spark://m:7077", 400, {}) == (800, 3200)
     assert shuffle_partition_plan("yarn", 16, {}) == (200, 800)
@@ -601,7 +603,9 @@ def test_shuffle_partition_plan_by_deployment(spark):
     assert shuffle_partition_plan("local[4]", 4, env) == (96, 384)
     assert shuffle_partition_plan("yarn", 4000, env) == (96, 384)
     # the live (local) session really got the local setting
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def test_similarity_recall_floor(spark):

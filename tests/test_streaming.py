@@ -1451,6 +1451,73 @@ def test_tumbling_state_survives_query_restart(spark, tmp_path):
     assert 0 < restart_emitted < n_windows
 
 
+def test_state_partitions_follow_cores_and_old_checkpoints_keep_theirs(
+    spark, tmp_path
+):
+    """A new stateful query gets one state store per core (the session's
+    spark.sql.shuffle.partitions is derived from defaultParallelism),
+    while a checkpoint created under the old fixed 32 resumes with its
+    recorded 32 stores and the same answer after the session conf
+    changes to the derived value."""
+    src = str(tmp_path / "in")
+    derived = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(derived)
+
+    def land(i: int) -> None:
+        spark.range(i * 100, (i + 1) * 100).select(
+            (F.col("id") % 7).alias("k")
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def run(ckpt: str):
+        """Drain src into a complete-mode count; returns (the final
+        per-key counts, the state-store counts the progress reported)."""
+        out: dict = {}
+
+        def keep(batch, _batch_id):
+            out.clear()
+            out.update({r.k: r.n for r in batch.collect()})
+
+        agg = (
+            spark.readStream.schema("k long").parquet(src)
+            .groupBy("k").agg(F.count("*").alias("n"))
+        )
+        q = (
+            agg.writeStream.foreachBatch(keep)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        assert q.awaitTermination(300)
+        parts = {
+            s.numShufflePartitions
+            for p in q.recentProgress for s in p.stateOperators
+        }
+        return out, parts
+
+    land(0)
+    land(1)
+    want = {k: (300 // 7) + (1 if k < 300 % 7 else 0) for k in range(7)}
+
+    old = str(tmp_path / "ckpt_old")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        first, parts = run(old)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(derived))
+    assert parts == {32}
+    assert sum(first.values()) == 200
+
+    land(2)
+    resumed, parts = run(old)  # session is back at the derived count
+    assert parts == {32}  # the checkpoint keeps its recorded count
+    assert resumed == want
+
+    fresh, parts = run(str(tmp_path / "ckpt_new"))
+    assert parts == {derived}
+    assert fresh == want
+
+
 def test_sessionized_eviction_fires_mid_replay_with_bounded_state(spark, tmp_path):
     """The production watermarked session path (sessionized: APPEND mode
     + 1h watermark), driven the way streaming_sessionized_eviction_
